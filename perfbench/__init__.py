@@ -1,0 +1,1 @@
+"""Repository benchmark: see README.md and ``python3 perfbench/run.py --help``."""
